@@ -219,7 +219,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # modules) into the registry namespace, and a same-named wrapper in
 # two families would silently shadow. Computed, so it cannot drift
 # from the module's actual wrapper set (the registration guard in
-# tests/test_sweep_rotation.py covers the registry side; the
+# tests/test_registry.py covers the registry side; the
 # collision guard covers cross-family shadowing).
 __all__ = sorted(
     _n

@@ -960,6 +960,7 @@ def curation_pipeline(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # sf0.1). shuffle() on a 1-element array is the identity in value
     # but non-deterministic to the optimizer, which pins the Filter
     # ABOVE the projection: one evaluation, same rows, same hash.
+    # Pinned by tests/test_plans.py::test_curation_pipeline_fused.
     kept = qs.withColumn(
         "quality", F.shuffle(F.array(F.col("quality")))[0]
     ).where(F.col("quality") >= 0.75)

@@ -234,10 +234,8 @@ def verify_key(
 
 
 def row_green(row: dict) -> bool:
-    """the gate's strict green predicate — all three match flags true
-    and no error. ONE definition shared by the CLI and the tests (the
-    driver-side rotation has its own, laxer ``registry._is_green``,
-    which tolerates absent flags on historical rows-only records)."""
+    """the gate's green predicate — all three match flags true and no
+    error. The one definition, shared by the CLI and the tests."""
     return bool(
         row.get("rows_match")
         and row.get("schema_match")

@@ -10,6 +10,8 @@ be visible in the executed plan, not just intended (SURVEY §4).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from rsbsa_etl_spark.registry import QUERIES
@@ -499,7 +501,8 @@ def test_curation_pipeline_fused(spark):
     # quality gate + dedup + split must fuse into one scan and one
     # exchange — join-back-by-id between stages would rescan the
     # corpus
-    plan = _plan(QUERIES["curation_pipeline"](spark, SF_DIR))
+    df = QUERIES["curation_pipeline"](spark, SF_DIR)
+    plan = _plan(df)
     assert plan.count("FileScan parquet") == 1
     assert plan.count("Exchange hashpartitioning") == 1
     # r8 verdict item 7: a composition must embed the SCALE-SAFE arm
@@ -510,6 +513,17 @@ def test_curation_pipeline_fused(spark):
     # BLAS stage, no second corpus scan
     assert "Join" not in plan, "composed pipeline grew a join stage"
     assert "FlatMapGroupsInPandas" not in plan
+    # the quality gate's pushdown barrier (functions/curation.py,
+    # ``F.shuffle(F.array(q))[0]``): the optimized Filter must test the
+    # PROJECTED quality attribute, so the regex feature tree (marked
+    # by its punctuation regex) is evaluated once. With a plain column
+    # the optimizer pushes the Filter below the Project and inlines
+    # the whole tree into it — every regex runs twice per row.
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    gate = r"Filter \(isnotnull\(quality#\d+\) AND \(quality#\d+ >= 0\.75\)\)"
+    assert re.search(gate, opt) and opt.count(r"[^\w\s]") == 1, (
+        "curation quality gate lost its pushdown barrier"
+    )
 
 
 def test_dedup_embedding_is_tiled_not_driver_collected(spark):
@@ -911,7 +925,7 @@ def test_committed_planaudit_matches_live_plans(spark):
     a streaming replay with captured micro-batch plans plus two
     previously-excluded build-executes-work keys, and — round 12 —
     two driver-loop keys whose rows sum the captured per-iteration
-    plans, exercising the LOOP_GATE open/close path) must match the
+    plans, exercising the LOOP_CAPTURE set/reset path) must match the
     committed rows counter-for-counter at the audit's own SF; a
     mismatch means re-run the audit CLI and commit the refreshed
     JSON alongside the code change."""
